@@ -459,7 +459,7 @@ object Multimodal {
     * the stream wins, none → loud failure. Hoisted per PARTITION (r16,
     * guide §1.2 per-task work): `AudioSystem.getAudioInputStream` runs
     * every call through `JDK13Services.getProviders`, a class-global
-    * SYNCHRONIZED ServiceLoader re-scan — measured by AudioLockProbe at
+    * SYNCHRONIZED ServiceLoader re-scan — measured (git history) at
     * ~79 µs/clip single-threaded AND zero parallel speedup (8 threads ×
     * 2000 clips: 1.47 s, the registry lock serializes all cores); the
     * hoisted reader decodes the same clips at 6.5 µs/clip and scales

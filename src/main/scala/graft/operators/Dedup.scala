@@ -25,9 +25,8 @@ object Dedup {
     * — the ONE site in main source that caches through the CacheManager
     * (everything else pins raw RDD leaves). Registered so a multi-query
     * harness can release them PROPERLY (df.unpersist drops both the
-    * buffers and the CacheManager entry) without a global clearCache,
-    * which would also evict deliberately pinned relations
-    * ([[Star.pinTables]]). */
+    * buffers and the CacheManager entry) and the queue does not retain
+    * one analyzed plan per construction ([[graft.Session.release]]). */
   private[graft] val materializedRegistry =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 

@@ -1692,7 +1692,7 @@ object Similarity {
     * bucket-skew factor, and at population ~15 the verify join shuffled
     * ~90 M candidate rows each carrying a 512-byte vector — 20.2×
     * time for 10× data (e100 1.30). At the cap geometry the same corpus
-    * measures 15.6 M candidate mass (EmbBandProbe). Band count is FIXED
+    * measures 15.6 M candidate mass (git history). Band count is FIXED
     * at 16: recall for the verdict-deciding ~0.9999-cosine re-crawl
     * pairs is 1-(1-p^bits)^16 with p ≈ 0.999 — ≥ 1-1e-29 even at a
     * 16-bit key, so growing bits never costs a pair (borderline
@@ -1982,8 +1982,8 @@ object Similarity {
     semanticCandPlan(index, shardBands)
   }
 
-  /** Probe seam: the serve chain's (index bands, shard bands) pair, for
-    * bucket-population diagnostics (graft.tools.SemCandProbe). */
+  /** Test seam: the serve chain's (index bands, shard bands) pair, for
+    * bucket-population diagnostics. */
   private[graft] def semanticServeBands(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val (_, _, index, shardBands) = semanticServeParts(spark, dir)
@@ -2353,9 +2353,9 @@ object Similarity {
     // re-encodes every row through the Row converter both ways (the
     // bandProbeDropIds lesson); the checkpoint stores compact
     // InternalRows and keeps the plan's size stats, so downstream join
-    // planning is unchanged. SemBreakProbe split the incremental serve
-    // 0.62 s construction / 0.99 s execution before the switch — the
-    // pin job was ~40 % of the query.
+    // planning is unchanged. Before the switch the incremental serve
+    // split 0.62 s construction / 0.99 s execution — the pin job was
+    // ~40 % of the query (per-phase numbers: perfbench/run.py --trace 1).
     val shardBands = Star.pin(shardBands0)
     // the index joins the probe DIRECTLY (a pre-join union would force
     // the bucketed index rows through a shuffle); intra-shard pairs come

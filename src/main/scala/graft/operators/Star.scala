@@ -49,29 +49,6 @@ object Star {
     "supplier", "part", "orders", "lineitem", "events", "documents",
     "embeddings")
 
-  /** Pin the star relations in columnar cache for a multi-query session
-    * (the bench pass, a notebook, a serve tier's hot dimension set) —
-    * the engine's buffer pool. Every query construction goes through
-    * [[table]], whose analyzed relation is plan-equal across queries, so
-    * one `.persist()` here substitutes an InMemoryTableScan (columnar,
-    * batch-stat filter pushdown, column pruning) for the parquet scan in
-    * EVERY subsequent query over the same snapshot — the per-query scan
-    * + decode tax of a ~200-query pass collapses into one materialization.
-    * MEMORY_AND_DISK: pressure spills columnar batches instead of
-    * failing; at cluster scale the same call pins the working set across
-    * executors (storage memory is the unified pool's borrowable half, so
-    * an over-large pin degrades to disk reads, never OOM).
-    * Returns the pinned relations (callers exclude their block ids from
-    * between-query cleanup). `events` is pinned in its NORMALIZED form —
-    * the shape every query consumes. */
-  def pinTables(spark: SparkSession, dir: String): Seq[DataFrame] =
-    tableNames.map { n =>
-      val df = if (n == "events") events(spark, dir) else table(spark, dir, n)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }
-
   /** SQL front-end: register every star-schema table as a temp view so
     * users can drive the engine with plain `spark.sql` (combine with
     * `spark.sql.extensions=graft.plans.GraftExtensions` for the custom

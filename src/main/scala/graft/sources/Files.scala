@@ -40,4 +40,39 @@ object Files {
       .filter(_._2 >= n).map(_._1)
       .toDS()
   }
+
+  /** Reap every `prefix*` dir directly under `bases` whose NEWEST mtime
+    * anywhere beneath it (not the root's) is older than `maxAgeMs`.
+    * Best-effort hygiene: an I/O error skips the dir or base. Directory
+    * streams are closed so repeated calls don't leak fds. */
+  def sweepStale(bases: Seq[java.nio.file.Path], prefix: String,
+                 maxAgeMs: Long): Unit = {
+    import java.nio.file.{Files => JFiles, Path => JPath}
+    val cutoff = System.currentTimeMillis() - maxAgeMs
+    def newestMtime(p: JPath): Long = {
+      val walk = JFiles.walk(p)
+      try walk.mapToLong { f =>
+        try JFiles.getLastModifiedTime(f).toMillis
+        catch { case _: java.io.IOException => 0L }
+      }.max.orElse(Long.MaxValue)
+      finally walk.close()
+    }
+    bases.distinct.foreach { b =>
+      try {
+        val listing = JFiles.list(b)
+        try listing.iterator().forEachRemaining { p =>
+          if (p.getFileName.toString.startsWith(prefix) &&
+            (try newestMtime(p) < cutoff
+             catch { case _: java.io.IOException => false })) {
+            try {
+              val walk = JFiles.walk(p)
+              try walk.sorted(java.util.Comparator.reverseOrder())
+                .forEach(f => { JFiles.deleteIfExists(f); () })
+              finally walk.close()
+            } catch { case _: java.io.IOException => () }
+          }
+        } finally listing.close()
+      } catch { case _: java.io.IOException => () }
+    }
+  }
 }

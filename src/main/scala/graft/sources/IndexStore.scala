@@ -1688,34 +1688,9 @@ object IndexStore {
     * unparseable legacy names age out under the same rule (no pid
     * parsing — the dirs are shared, ownership is corpus identity, not
     * process). */
-  private def sweepOrphans(): Unit = {
-    if (!swept.compareAndSet(false, true)) return
-    import java.nio.file.{Files, Path => JPath, Paths}
-    val base = Paths.get(System.getProperty("java.io.tmpdir"))
-    val cutoff = System.currentTimeMillis() - 24L * 60 * 60 * 1000
-    def newestMtime(p: JPath): Long = {
-      val walk = Files.walk(p)
-      try walk.mapToLong { f =>
-        try Files.getLastModifiedTime(f).toMillis
-        catch { case _: java.io.IOException => 0L }
-      }.max.orElse(Long.MaxValue)
-      finally walk.close()
-    }
-    try {
-      val listing = Files.list(base)
-      try listing.iterator().forEachRemaining { p =>
-        val name = p.getFileName.toString
-        if (name.startsWith("graft_idx_") &&
-          (try newestMtime(p) < cutoff
-           catch { case _: java.io.IOException => false })) {
-          try {
-            val walk = Files.walk(p)
-            try walk.sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => { Files.deleteIfExists(f); () })
-            finally walk.close()
-          } catch { case _: java.io.IOException => () }
-        }
-      } finally listing.close()
-    } catch { case _: java.io.IOException => () }
-  }
+  private def sweepOrphans(): Unit =
+    if (swept.compareAndSet(false, true))
+      Files.sweepStale(Seq(java.nio.file.Paths.get(
+        System.getProperty("java.io.tmpdir"))), "graft_idx_",
+        24L * 60 * 60 * 1000)
 }

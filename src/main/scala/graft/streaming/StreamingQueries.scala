@@ -33,8 +33,7 @@ object StreamingQueries {
     * independent determinism doctrine) — at replay state volume the
     * per-trigger store commits dominate any join parallelism 8 buys.
     * On a real cluster you'd size this to state volume, not core count —
-    * state partitioning is a durability layout, not a parallelism knob
-    * (the SPARK_GRAFT_STREAM_PARTS probe knob re-sizes it at scale). */
+    * state partitioning is a durability layout, not a parallelism knob. */
   /** `finalNoDataBatch = true` keeps Spark's trailing no-data
     * micro-batch: required by a replay whose LAST emissions happen only
     * when the final watermark is APPLIED (windowed append: the last
@@ -56,37 +55,11 @@ object StreamingQueries {
     val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val old = spark.conf.get(key)
     val oldNd = spark.conf.get(ndKey)
-    // Replay-shape knob for scale probes (documented in NOTES.md):
-    // overrides the per-replay shuffle-partition count. Validated here —
-    // a typo'd value must fail ONE clear way at the override site, not
-    // as a NumberFormatException deep inside every streaming query.
-    val nEff = sys.env.get("SPARK_GRAFT_STREAM_PARTS").map { s =>
-      scala.util.Try(s.toInt).getOrElse(sys.error(
-        s"SPARK_GRAFT_STREAM_PARTS must be an int, got '$s'"))
-    }.getOrElse(n)
-    // A/B knob for state-store / micro-batch confs (probe-only, NOT a
-    // production switch): "k=v;k2=v2" applied for the replay's scope
-    // and restored after — how the addBatch-floor candidates (RocksDB
-    // provider, async progress tracking, changelog checkpointing) get
-    // measured without a rebuild per hypothesis.
-    val extra: Seq[(String, String)] =
-      sys.env.get("SPARK_GRAFT_STREAM_CONF").toSeq
-        .flatMap(_.split(';')).filter(_.contains('='))
-        .map { kv =>
-          val Array(k, v) = kv.split("=", 2)
-          k.trim -> v.trim
-        }
-    val extraOld = extra.map { case (k, _) => k -> spark.conf.getOption(k) }
-    spark.conf.set(key, nEff.toString)
+    spark.conf.set(key, n.toString)
     spark.conf.set(ndKey, finalNoDataBatch.toString)
-    extra.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally {
       spark.conf.set(key, old)
       spark.conf.set(ndKey, oldNd)
-      extraOld.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
     }
   }
 
@@ -222,7 +195,7 @@ object StreamingQueries {
     freshReplayDir(name, preferShm = false)
 
   private def freshReplayDir(name: String, preferShm: Boolean): String = {
-    import java.nio.file.{Files, Path => JPath, Paths}
+    import java.nio.file.{Files, Paths}
     val shm = Paths.get("/dev/shm")
     val disk = Paths.get(System.getProperty("java.io.tmpdir"))
     val shmOk = Files.isDirectory(shm) && Files.isWritable(shm)
@@ -238,36 +211,11 @@ object StreamingQueries {
     // found anywhere under the dir, not the root's: a checkpoint root's
     // mtime stops advancing once offsets/commits/state subdirs exist,
     // while a live query (possibly another JVM) keeps touching files
-    // deep inside it on every trigger. Directory streams are closed so
-    // repeated launches don't leak fds.
-    if (ckptSwept.compareAndSet(false, true)) {
-      val cutoff = System.currentTimeMillis() - 30L * 60 * 1000
-      def newestMtime(p: JPath): Long = {
-        val walk = Files.walk(p)
-        try walk.mapToLong { f =>
-          try Files.getLastModifiedTime(f).toMillis
-          catch { case _: java.io.IOException => 0L }
-        }.max.orElse(Long.MaxValue)
-        finally walk.close()
-      }
-      (if (shmOk) Seq(shm, disk) else Seq(disk)).distinct.foreach { b =>
-        try {
-          val listing = Files.list(b)
-          try listing.iterator().forEachRemaining { p =>
-            if (p.getFileName.toString.startsWith("graft_ckpt_") &&
-              (try newestMtime(p) < cutoff
-               catch { case _: java.io.IOException => false })) {
-              try {
-                val walk = Files.walk(p)
-                try walk.sorted(java.util.Comparator.reverseOrder())
-                  .forEach(f => { Files.deleteIfExists(f); () })
-                finally walk.close()
-              } catch { case _: java.io.IOException => () }
-            }
-          } finally listing.close()
-        } catch { case _: java.io.IOException => () }
-      }
-    }
+    // deep inside it on every trigger.
+    if (ckptSwept.compareAndSet(false, true))
+      graft.sources.Files.sweepStale(
+        if (shmOk) Seq(shm, disk) else Seq(disk), "graft_ckpt_",
+        30L * 60 * 1000)
     Files.createTempDirectory(base, s"graft_ckpt_$name").toString
   }
 
@@ -366,8 +314,8 @@ object StreamingQueries {
     // chronoReplayWithSentinel contract) — a no-data batch after it would
     // re-run the stateful plan one more time only to apply sentinel 2's
     // own watermark, emitting nothing that survives the user filter
-    // (~0.35 s/replay of pure batch machinery, measured by
-    // StreamProgressProbe; oracle rows byte-identical either way).
+    // (~0.35 s/replay of pure batch machinery, measured in git history;
+    // oracle rows byte-identical either way).
     appendReplayToParquet(spark, agg, "sessionize")
       .filter(col("user_id") >= 0) // drop the sentinel's own sessions
       .withColumn("session_id", row_number().over(

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ingest scale probe for the INMET DataSource V2 at a file count the
@@ -16,13 +15,7 @@ object Dsv2Probe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val trigger = if (args.length > 1) args(1).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.build()
     spark.sparkContext.setLogLevel("ERROR")
     val glob = s"$dir/*.csv"
     val fmt = "graft.sources.v2.InmetSource"

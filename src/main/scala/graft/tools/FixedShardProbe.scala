@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Fixed-shard serve-exponent probe (BASELINE campaign, r11 verdict
   * item 5): the registered serve fixtures model the arriving shard as
   * 10 % OF the corpus, so their measured decade exponents fold fixture
@@ -22,20 +20,12 @@ object FixedShardProbe {
     val docCap = if (args.length > 1) args(1).toLong else 5000L
     val vecCap = if (args.length > 2) args(2).toLong else 2000L
     val reps = if (args.length > 3) args(3).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // the point-lookup A/B needs the survivor IN-list pushed as
-      // per-value parquet predicates; past the default threshold (10)
-      // Spark degrades IN pushdown to a [min, max] range, which for
-      // uniform hash keys prunes nothing
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "200000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the point-lookup A/B needs the survivor IN-list pushed as
+    // per-value parquet predicates; past the default threshold (10)
+    // Spark degrades IN pushdown to a [min, max] range, which for
+    // uniform hash keys prunes nothing
+    val spark = graft.Session.build(extra =
+      Map("spark.sql.parquet.pushdown.inFilterThreshold" -> "200000"))
     spark.sparkContext.setLogLevel("ERROR")
 
     // ROUTED-RESIDENCY measurement first: the family memo upgrades in
@@ -114,9 +104,7 @@ object FixedShardProbe {
     for ((label, mk) <- chains
          if fspOnly.forall(_.contains(label))) {
       def run(): Double = {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        graft.Session.release(spark)
         val t0 = System.nanoTime()
         mk().write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9

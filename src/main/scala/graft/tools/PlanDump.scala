@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump formatted physical plans of the headline queries to
@@ -9,17 +8,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Testdata parquet timestamps carry isAdjustedToUTC=false; read them as
-      // session-TZ (UTC) TIMESTAMP, not TIMESTAMP_NTZ, so timestamp functions
-      // (unix_micros, watermarks) keep their pre-Spark-4-inference semantics.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.build()
     spark.sparkContext.setLogLevel("ERROR")
 
     val entries: Seq[(String, String)] = Seq(
@@ -212,7 +201,7 @@ object PlanDump {
 
     val sb = new StringBuilder
     sb.append("# PLANS — headline physical plans (generated by graft.tools.PlanDump)\n\n")
-    sb.append(s"Source: `$sfDir`, local[$cpus]. Plans are the static\n")
+    sb.append(s"Source: `$sfDir`, ${spark.sparkContext.master}. Plans are the static\n")
     sb.append("pre-execution shapes (AdaptiveSparkPlan wraps them; AQE\n")
     sb.append("re-plans exchanges at runtime but the broadcast/pushdown/\n")
     sb.append("partial-agg decisions shown are decided here).\n")

@@ -43,13 +43,10 @@ object StarGen {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graft_sf1")
     val mult = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-stargen")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // a fixed 32 shuffle partitions keeps generated corpora byte-identical
+    // whatever the host's core count
+    val spark = graft.Session.build(
+      extra = Map("spark.sql.shuffle.partitions" -> "32"))
     spark.sparkContext.setLogLevel("ERROR")
     generate(spark, out, mult)
     spark.stop()

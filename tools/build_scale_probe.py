@@ -79,7 +79,7 @@ def build(out_base, factors):
 
 def build_skew(out_base, factors, hot_frac=0.3):
     """Skewed-key replication of the events table for the AQE skew-join
-    probe (tools/SkewProbe.scala): replica rows keep their timestamps but
+    probe (measured in git history): replica rows keep their timestamps but
     `hot_frac` of ALL rows are remapped to user_id=0 — one hot key whose
     row count grows linearly with R while the tail stays uniform. This is
     the adversarial shape AqeSkewSpec pins at unit scale; the probe
