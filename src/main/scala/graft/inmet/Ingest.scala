@@ -142,21 +142,43 @@ object Ingest {
 
   // -------------------------------------------------------------- previsoes
 
+  /** A header line's raw bytes as text. INMET publishes ISO-8859-1;
+    * converted copies are UTF-8, sometimes double-encoded (UTF-8 bytes
+    * read as Latin-1 and written back as UTF-8). Spark's text source keeps
+    * the bytes as they are. Decode as UTF-8 when the bytes are valid
+    * UTF-8, else as ISO-8859-1, then undo one level of double encoding:
+    * a string whose chars all fit in one byte and whose Latin-1 bytes are
+    * valid UTF-8 is decoded once more. Without this, `sanitize` turns the
+    * accented names into `precipitao_…` or `precipitaaao_…`, the columns
+    * miss, and their measures silently zero-fill. Driver-side, one line
+    * per file. */
+  private[inmet] def decodeHeader(bytes: Array[Byte]): String = {
+    import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
+    def strictUtf8(b: Array[Byte]): Option[String] =
+      scala.util.Try(UTF_8.newDecoder().decode(java.nio.ByteBuffer.wrap(b))
+        .toString).toOption
+    val s = strictUtf8(bytes).getOrElse(new String(bytes, ISO_8859_1))
+    if (s.exists(_ > '\u007f') && s.forall(_ <= '\u00ff'))
+      strictUtf8(s.getBytes(ISO_8859_1)).getOrElse(s)
+    else s
+  }
+
   /** Per-file 1-based indices of the needed section-2 columns, resolved from
-    * each file's own (sanitized) header line — robust to the header
-    * encoding/accent drift between files. One collected row per file; the
-    * result is broadcast, so data rows never leave the executors. */
+    * each file's own (decoded, sanitized) header line — robust to the
+    * header encoding/accent drift between files. One collected row per
+    * file; the result is broadcast, so data rows never leave the
+    * executors. */
   def fileColumnIndex(spark: SparkSession, lines: DataFrame): DataFrame = {
     import spark.implicits._
     val wanted = "data" +: measureRenames.map(_._1)
     val hdrs = lines.filter(col("value").startsWith("Data;"))
-      .select("file", "value").distinct().collect()
+      .select(col("file"), col("value").cast("binary")).distinct().collect()
     val rows = hdrs
       // a corrupted file with several conflicting header lines must not
       // fan out its data rows through a multi-row join: keep one header
       // per file, deterministically (lexicographically smallest)
       .groupBy(_.getString(0)).view
-      .mapValues(_.map(_.getString(1)).min).toSeq
+      .mapValues(_.map(r => decodeHeader(r.getAs[Array[Byte]](1))).min).toSeq
       .map { case (file, header) =>
         val names = header.split(";", -1).map(sanitize)
         val idx = names.zipWithIndex.toMap // later duplicate wins; wanted names are unique

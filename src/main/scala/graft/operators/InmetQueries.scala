@@ -72,19 +72,10 @@ object InmetQueries {
       .orderBy("cidade_sk", "ano", "mes")
   }
 
-  /** Shared oracle scaffolding: raw INMET files -> cleansed hourly rows
-    * joined with the metadata-derived station key, in DuckDB SQL. Mirrors
-    * Ingest's line classification and 1-based split indexing exactly. */
-  /** Gate for the DataSource V2 reader (graft.sources.v2.InmetSource):
-    * the same raw files through the V2 scan — with the March date range
-    * pushed INTO the scan and only 3 of 7 columns read — aggregated to
-    * a daily rollup; the oracle re-parses the raw files in DuckDB and
-    * applies the same range. Proves the custom source end-to-end against
-    * an independent engine, not just against our own Ingest path. */
-  def inmetDsv2(spark: SparkSession, dir: String): DataFrame = {
-    val v2 = spark.read.format("graft.sources.v2.InmetSource")
-      .load(fixtureGlob)
-    v2.filter(col("data_medicao") >= lit("2025-03-01") &&
+  /** The March daily rollup of the hourly rows, shared by the batch and
+    * the streaming query (both gated by [[inmetRangeSql]]). */
+  private def marchRollup(previsoes: DataFrame): DataFrame =
+    previsoes.filter(col("data_medicao") >= lit("2025-03-01") &&
         col("data_medicao") < lit("2025-04-01"))
       .groupBy("wmo", "data_medicao")
       .agg(
@@ -93,29 +84,24 @@ object InmetQueries {
         (sum(Star.cents(col("temperatura_c"))).cast("double") / 100.0 /
           count(lit(1))).as("temp_avg_c"),
         count(lit(1)).as("registros_horarios"))
-      .orderBy("wmo", "data_medicao")
-  }
 
-  /** The SAME March rollup ingested through the DSv2 source's
-    * MICRO-BATCH face: `readStream.format(InmetSource)` replays the
-    * station files through the identical per-file reader (discovery-log
-    * offsets), a stateful streaming aggregation folds the hourly rows,
-    * and the complete-mode sink holds the final rollup. Deterministic —
-    * every file is replayed and the aggregate is order-independent — so
-    * the BATCH oracle (the DuckDB re-parse of the raw CSVs) gates the
-    * streaming ingest path end-to-end, not just a row-parity spec. */
+  /** A date-range slice of the hourly fact: the March daily rollup over
+    * the batch `previsoes`; the oracle re-parses the raw files in DuckDB
+    * and applies the same range. */
+  def inmetRange(spark: SparkSession, dir: String): DataFrame =
+    marchRollup(Pipeline.stage(spark, fixtureGlob).previsoes)
+      .orderBy("wmo", "data_medicao")
+
+  /** The same March rollup over the STREAMING ingest
+    * ([[graft.streaming.InmetStreaming.previsoesStream]]): the station
+    * files are replayed as a file stream, a stateful aggregation folds the
+    * hourly rows and the complete-mode sink holds the final rollup.
+    * Deterministic — every file is replayed and the aggregate is
+    * order-independent — so the batch oracle gates the streaming ingest
+    * end to end. */
   def inmetStream(spark: SparkSession, dir: String): DataFrame = {
-    val v2 = spark.readStream.format("graft.sources.v2.InmetSource")
-      .load(fixtureGlob)
-    val agg = v2.filter(col("data_medicao") >= lit("2025-03-01") &&
-        col("data_medicao") < lit("2025-04-01"))
-      .groupBy("wmo", "data_medicao")
-      .agg(
-        min("temperatura_c").as("temp_min_c"),
-        max("temperatura_c").as("temp_max_c"),
-        (sum(Star.cents(col("temperatura_c"))).cast("double") / 100.0 /
-          count(lit(1))).as("temp_avg_c"),
-        count(lit(1)).as("registros_horarios"))
+    val agg = marchRollup(graft.streaming.InmetStreaming.previsoesStream(
+      spark, fixtureGlob.stripSuffix("/*.csv"), fixtureGlob))
     graft.streaming.StreamingQueries.withStreamPartitions(spark, 4) {
       val q = agg.writeStream
         .format("memory")
@@ -129,7 +115,7 @@ object InmetQueries {
     spark.table("graft_inmet_stream").orderBy("wmo", "data_medicao")
   }
 
-  private val inmetDsv2Sql =
+  private val inmetRangeSql =
     s"""$parsedCte
        |SELECT wmo, data_medicao,
        |  MIN(temperatura_c) AS temp_min_c,
@@ -142,6 +128,9 @@ object InmetQueries {
        |GROUP BY wmo, data_medicao
        |ORDER BY wmo, data_medicao""".stripMargin
 
+  /** Shared oracle scaffolding: raw INMET files -> cleansed hourly rows
+    * joined with the metadata-derived station key, in DuckDB SQL. Mirrors
+    * Ingest's line classification and 1-based split indexing exactly. */
   private def parsedCte: String =
     s"""WITH lines AS (
        |  SELECT filename, column0 AS line
@@ -272,7 +261,7 @@ object InmetQueries {
     QueryDef("q_inmet_kpis", inmetKpis, Some(inmetKpisSql)),
     QueryDef("q_inmet_station_distance", inmetStationDistance,
       Some(inmetStationDistanceSql)),
-    QueryDef("q_inmet_dsv2", inmetDsv2, Some(inmetDsv2Sql)),
-    QueryDef("q_inmet_stream", inmetStream, Some(inmetDsv2Sql)),
+    QueryDef("q_inmet_range", inmetRange, Some(inmetRangeSql)),
+    QueryDef("q_inmet_stream", inmetStream, Some(inmetRangeSql)),
   )
 }

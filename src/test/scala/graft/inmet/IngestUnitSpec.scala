@@ -2,6 +2,7 @@ package graft.inmet
 
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.sql.Date
 
 /** Unit coverage of the cleansing scalar semantics (SURVEY.md §2.3). */
@@ -20,6 +21,64 @@ class IngestUnitSpec extends SparkSuite {
     assert(Ingest.sanitize("VENTO, VELOCIDADE HORARIA (m/s)")
       === "vento_velocidade_horaria_m_s")
     assert(Ingest.sanitize("Data") === "data")
+  }
+
+  private val a508 = "/inmet/INMET_SE_MG_A508_ALMENARA.csv"
+
+  private def readUtf8(resource: String): String =
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(resourcePath(resource))), UTF_8)
+
+  /** Write `files` (name -> bytes) into a fresh directory, run `body` on
+    * it, then delete it. */
+  private def withFiles[T](files: Seq[(String, Array[Byte])])(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("inmet_files")
+    files.foreach { case (name, bytes) =>
+      java.nio.file.Files.write(dir.resolve(name), bytes)
+    }
+    try body(dir.toString)
+    finally {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  }
+
+  test("header encodings: UTF-8, ASCII, Latin-1 and double-encoded resolve the same indices") {
+    val header = readUtf8(a508).linesIterator.find(_.startsWith("Data;")).get
+    val ascii = java.text.Normalizer.normalize(header,
+      java.text.Normalizer.Form.NFKD).replaceAll("[^\\p{ASCII}]", "")
+    val doubled = new String(header.getBytes(UTF_8), ISO_8859_1)
+    val encodings = Seq(
+      "utf8" -> header.getBytes(UTF_8),
+      "ascii" -> ascii.getBytes(UTF_8),
+      "latin1" -> header.getBytes(ISO_8859_1),
+      "double" -> doubled.getBytes(UTF_8))
+    assert(Ingest.decodeHeader(header.getBytes(ISO_8859_1)) === header)
+    assert(Ingest.decodeHeader(doubled.getBytes(UTF_8)) === header)
+    withFiles(encodings.map { case (n, b) => s"$n.csv" -> b }) { dir =>
+      val idx = Ingest.fileColumnIndex(spark, Ingest.readLines(spark, s"$dir/*.csv"))
+        .collect().map(r => r.getString(0).split('/').last ->
+          (1 to 6).map(r.getInt)).toMap
+      // data, precipitation, pressure, temperature, humidity, wind
+      val want = Seq(1, 3, 5, 8, 16, 19)
+      encodings.foreach { case (n, _) =>
+        assert(idx(s"$n.csv") === want, s"$n header")
+      }
+    }
+  }
+
+  test("an ISO-8859-1 station file ingests the same previsoes as its UTF-8 original") {
+    val text = readUtf8(a508)
+    withFiles(Seq("A508_latin1.csv" -> text.getBytes(ISO_8859_1))) { dir =>
+      val latin1 = Pipeline.stage(spark, s"$dir/*.csv").previsoes
+      val utf8 = Pipeline.stage(spark, resourcePath(a508)).previsoes
+      assert(latin1.count() === 4344L)
+      assert(latin1.except(utf8).isEmpty && utf8.except(latin1).isEmpty)
+      // the two columns a Latin-1 header used to lose carry real values
+      assert(latin1.filter($"precipitacao_mm" > 0.0).count() > 0L)
+      assert(latin1.filter($"pressao_atm_kpa" > 0.0).count() > 0L)
+    }
   }
 
   test("commaDouble: decimal comma, leading-comma fraction, null tokens") {
@@ -45,30 +104,22 @@ class IngestUnitSpec extends SparkSuite {
   }
 
   test("multi-file ingest: 20 generated stations parse in one pass with exact counts") {
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(resourcePath("/inmet/INMET_SE_MG_A508_ALMENARA.csv"))),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val dir = java.nio.file.Files.createTempDirectory("inmet_many")
-    (0 until 20).foreach { i =>
+    val src = readUtf8(a508)
+    val files = (0 until 20).map { i =>
       val code = f"A7$i%02d"
       val body = src
         .replace("CODIGO (WMO):;A508", s"CODIGO (WMO):;$code")
         .replace("ESTACAO:;ALMENARA", f"ESTACAO:;GEN$i%02d")
-      java.nio.file.Files.write(dir.resolve(s"INMET_SE_MG_${code}_GEN$i.csv"),
-        body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      s"INMET_SE_MG_${code}_GEN$i.csv" -> body.getBytes(UTF_8)
     }
-    try {
-      val st = Pipeline.stage(spark, dir.toString + "/*.csv")
+    withFiles(files) { dir =>
+      val st = Pipeline.stage(spark, dir + "/*.csv")
       assert(st.cidades.count() === 20L)
       assert(st.previsoes.count() === 20L * 4344L)
       assert(st.previsoes.select("wmo").distinct().count() === 20L)
       val an = Pipeline.analytics(st)
       assert(an.fatoAggPrevisoesDia.count() === 20L * 181L)
       assert(an.cidadeKpisMensal.count() === 20L * 6L)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 

@@ -32,84 +32,55 @@ class ConnectedComponentsPropertySpec extends SparkSuite {
     try body finally spark.conf.unset(key)
   }
 
+  /** Random graphs over a small id space. Self-loops, both orientations
+    * of an edge and repeated edges are all allowed: a node seen only in a
+    * self-loop must still get its own label on both branches. */
+  private val edgeGen = for {
+    n <- Gen.choose(2, 60)          // node id space
+    m <- Gen.choose(1, 120)         // edge count
+    es <- Gen.listOfN(m, Gen.zip(Gen.choose(0L, n.toLong), Gen.choose(0L, n.toLong)))
+  } yield es
+
+  private def labels(edges: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    Dedup.connectedComponents(edges)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** driver branch == forced-distributed branch == union-find */
+  private def checkSeeds(seeds: Seq[Long]): Unit = seeds.foreach { seed =>
+    val edges = edgeGen(Gen.Parameters.default, Seed(seed))
+      .getOrElse(Seq((0L, 1L)))
+    // default path (driver union-find under the gate at this scale)
+    val got = labels(edges.toDF("id_a", "id_b"))
+    // forced-distributed path must produce the identical labeling
+    val gotDist = forcedDistributed(labels(edges.toDF("id_a", "id_b")))
+    val want = unionFind(edges)
+    assert(got === want, s"seed $seed, edges $edges")
+    assert(gotDist === want, s"distributed path, seed $seed, edges $edges")
+  }
+
   test("connectedComponents == union-find on random graphs (20 seeds)") {
-    val edgeGen = for {
-      n <- Gen.choose(2, 60)          // node id space
-      m <- Gen.choose(1, 120)         // edge count
-      es <- Gen.listOfN(m, for {
-        a <- Gen.choose(0L, n.toLong)
-        b <- Gen.choose(0L, n.toLong) suchThat (_ != a)
-      } yield (math.min(a, b), math.max(a, b)))
-    } yield es.distinct
-    (1 to 20).foreach { i =>
-      val edges = edgeGen(Gen.Parameters.default, Seed(i.toLong))
-        .getOrElse(Seq((0L, 1L)))
-      // default path (driver union-find under the gate at this scale)
-      val got = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // forced-distributed path must produce the identical labeling
-      val gotDist = forcedDistributed {
-        Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      }
-      val want = unionFind(edges)
-      assert(got === want, s"seed $i, edges $edges")
-      assert(gotDist === want, s"distributed path, seed $i, edges $edges")
-    }
+    checkSeeds((1 to 20).map(_.toLong))
   }
 
-  test("starComponents == union-find on random graphs (10 seeds)") {
-    val edgeGen = for {
-      n <- Gen.choose(2, 60)
-      m <- Gen.choose(1, 120)
-      es <- Gen.listOfN(m, for {
-        a <- Gen.choose(0L, n.toLong)
-        b <- Gen.choose(0L, n.toLong) suchThat (_ != a)
-      } yield (math.min(a, b), math.max(a, b)))
-    } yield es.distinct
-    (1 to 10).foreach { i =>
-      val edges = edgeGen(Gen.Parameters.default, Seed(100L + i))
-        .getOrElse(Seq((0L, 1L)))
-      val got = Dedup.starComponents(edges.toDF("id_a", "id_b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val gotDist = forcedDistributed {
-        Dedup.starComponents(edges.toDF("id_a", "id_b"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      }
-      assert(got === unionFind(edges), s"seed $i, edges $edges")
-      assert(gotDist === unionFind(edges),
-        s"distributed path, seed $i, edges $edges")
-    }
+  test("connectedComponents == union-find on random graphs (seeds 101-110)") {
+    checkSeeds((1 to 10).map(100L + _))
   }
 
-  test("starComponents: 96-node chain converges (min-label would need 96 rounds)") {
-    // forced distributed: the chain exists to exercise the large-star/
-    // small-star convergence, which the driver gate would bypass
+  test("connectedComponents: 96-node chain converges on the distributed branch") {
+    // forced distributed: the chain exercises the large-star/small-star
+    // round bound (min-label propagation would need 96 rounds), which the
+    // driver gate would bypass
     val chain = (0L until 96L).sliding(2).map(s => (s(0), s(1))).toSeq
-    val got = forcedDistributed {
-      Dedup.starComponents(chain.toDF("id_a", "id_b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
+    val got = forcedDistributed(labels(chain.toDF("id_a", "id_b")))
     assert(got.size === 96)
     assert(got.values.forall(_ == 0L))
   }
 
-  test("starComponents == connectedComponents on the real jaccard edge set") {
+  test("connectedComponents: forced-distributed == driver on the real jaccard edge set") {
     val edges = Dedup.ngramJaccard(spark, "/root/testdata/sf0.001")
       .select("id_a", "id_b")
-    val a = Dedup.starComponents(edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = Dedup.connectedComponents(edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // and the forced-distributed forms agree on the real edge set too
-    val (aDist, bDist) = forcedDistributed {
-      (Dedup.starComponents(edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
-        Dedup.connectedComponents(edges)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    }
-    assert(a === b)
-    assert(aDist === a)
-    assert(bDist === b)
+    val driver = labels(edges)
+    assert(driver.nonEmpty)
+    assert(forcedDistributed(labels(edges)) === driver)
   }
 }
